@@ -5,7 +5,7 @@ The reference posts flat docs to Solr and lets Lucene build the index
 same artifacts natively as Spark tables:
 
 - ``postings(tid, bucket, block_id, n, block_max_tf, block_min_dl,
-  blob|plist)`` — keyed by ``tid = xxhash64(term)``; exact term strings
+  blob)`` — keyed by ``tid = xxhash64(term)``; exact term strings
   live in dfreq (build verifies tid injectivity per corpus)
 - ``doclen(doc_id, repo, path, lang, dl, content_sha256, seg)``  (doc
   store + length norms + the per-row sha256 invariant from BASELINE.json)
@@ -97,7 +97,6 @@ class IndexConfig:
     n_buckets: int = 32
     seg_blocks: int = 8192
     analyzer: str = "code"
-    compress: bool = True
     meta_cols: tuple[str, ...] = ("repo", "path", "lang")
     # v5: store each posting's within-doc token positions (Lucene text
     # fields index positions by default — required for phrase queries,
@@ -134,6 +133,14 @@ def _cfg_from_meta(meta: dict, path: str) -> IndexConfig:
             f"v{INDEX_FORMAT_VERSION}/v{POSITIONS_FORMAT_VERSION} — rebuild "
             "with build_to_path"
         )
+    if meta.get("compress") is False:
+        # the retired uncompressed layout (posting struct arrays instead
+        # of blobs) shares format v4 with the blob layout, so the
+        # version check alone cannot refuse it
+        raise ValueError(
+            f"index at {path} uses the retired uncompressed postings layout; "
+            "rebuild with build_to_path"
+        )
     return IndexConfig(
         k1=meta["k1"],
         b=meta["b"],
@@ -141,7 +148,6 @@ def _cfg_from_meta(meta: dict, path: str) -> IndexConfig:
         n_buckets=meta["n_buckets"],
         seg_blocks=meta["seg_blocks"],
         analyzer=meta["analyzer"],
-        compress=meta["compress"],
         positions=(fmt == POSITIONS_FORMAT_VERSION),
     )
 
@@ -364,17 +370,15 @@ def _postings_blocks(tf: DataFrame, cfg: IndexConfig) -> DataFrame:
     per-block score bound even after later appends shift avgdl — appended
     segments never invalidate existing pruning metadata.
 
-    Compressed path (default): shuffle-sort slim (tid, doc_id, tf, dl)
-    rows by (tid, doc_id) and run one linear numpy pass per partition
-    (sort-based grouping — Lucene's segment flush is the same shape).
+    Shuffle-sort slim (tid, doc_id, tf, dl) rows by (tid, doc_id) and
+    run one linear numpy pass per partition (sort-based grouping —
+    Lucene's segment flush is the same shape).
     Rows leave the encoder already sorted, so the parquet row groups get
     tid-clustered min/max stats for free. The term STRING never enters
     the shuffle/sort/Arrow path (see _make_sorted_encoder); exact strings
     live in the dfreq table, and build_to_path verifies tid uniqueness
     against it, so a (cosmically unlikely, 2^-64/pair) hash collision
     fails the build loudly instead of silently merging two terms.
-    The agg path (collect_list + sort_array) remains for
-    ``compress=False`` debug builds.
     """
     cols = ["doc_id", "tf", "dl"] + (["positions"] if cfg.positions else [])
     slim = tf.select(F.xxhash64("term").alias("tid"), *cols)
@@ -391,27 +395,8 @@ def _postings_blocks_tid(slim: DataFrame, cfg: IndexConfig) -> DataFrame:
     has_pos = "positions" in slim.columns
     if cfg.positions and not has_pos:
         raise ValueError("positional index: encoder input must carry positions")
-    if cfg.positions and not cfg.compress:
-        raise NotImplementedError("positions require compress=True (v5 blobs)")
     bucket = F.pmod(F.col("tid"), F.lit(cfg.n_buckets)).cast("int").alias("bucket")
     seg = F.floor(F.col("block_id") / cfg.seg_blocks).cast("long").alias("seg")
-    if not cfg.compress:
-        return (
-            slim.withColumn(
-                "block_id", F.floor(F.col("doc_id") / cfg.block_size).cast("long")
-            )
-            .groupBy("tid", "block_id")
-            .agg(
-                F.sort_array(F.collect_list(F.struct("doc_id", "tf", "dl"))).alias("plist"),
-                F.count(F.lit(1)).cast("int").alias("n"),
-                F.max("tf").cast("int").alias("block_max_tf"),
-                F.min("dl").cast("int").alias("block_min_dl"),
-            )
-            .select(
-                "tid", "block_id", "n", "block_max_tf", "block_min_dl", "plist",
-                bucket, seg,
-            )
-        )
     pre = slim.repartition(
         F.col("tid"), F.floor(F.col("doc_id") / cfg.block_size)
     ).sortWithinPartitions("tid", "doc_id")
@@ -641,9 +626,6 @@ def build_to_path(
                 t0 = lin.start(stage)
                 tf_g = tf_staged.where(F.col("bucket").isin(group))
                 pobs = Observation(f"postings_metrics_{stage}")
-                size_metric = (
-                    F.sum(F.length("blob")) if cfg.compress else F.lit(0).cast("long")
-                )
                 # No repartition-by-bucket before the write: that made ONE
                 # task per bucket and head-term buckets are heavy
                 # (measured: postings stage nearly thread-count-
@@ -653,7 +635,7 @@ def build_to_path(
                 # bucket directories, at the cost of more files per
                 # bucket.
                 blocks = _postings_blocks(tf_g, cfg).observe(
-                    pobs, F.sum("n").alias("np"), size_metric.alias("nb")
+                    pobs, F.sum("n").alias("np"), F.sum(F.length("blob")).alias("nb")
                 )
                 dfreq_fut = pool.submit(_dfreq_write, tf_g)
                 # Dynamic partition overwrite (per-write option — never
@@ -697,7 +679,6 @@ def build_to_path(
             "n_buckets": cfg.n_buckets,
             "seg_blocks": cfg.seg_blocks,
             "analyzer": cfg.analyzer,
-            "compress": cfg.compress,
         }
     )
 
@@ -729,10 +710,17 @@ def append_to_index(docs_new: DataFrame, path: str, batch_id: str | None = None)
     cycle, ``oni-indexer.js:158-160``, SURVEY.md §2.C11 — Lucene-segment
     style: new docs form new segments, never rewrites).
 
-    Requires fresh doc_ids (min(new) > max(existing)): doc-range blocking
-    then guarantees appended docs land in NEW blocks, so postings, dfreq,
-    doclen and stats are pure appends — and the avgdl-independent block
-    bounds keep pruning lossless as avgdl drifts. Query-side, Searcher
+    Requires fresh doc_ids (min(new) > max(existing)), so postings,
+    dfreq, doclen and stats are pure appends — and the avgdl-independent
+    block bounds keep pruning lossless as avgdl drifts. Appended docs do
+    NOT always land in new blocks: when min(new) is not a multiple of
+    block_size, the boundary block gets a second row per term, one per
+    segment (tests/test_append.py splits at 300/400 with block_size=64,
+    so blocks 4 and 6 hold one row per segment for each term present on
+    both sides of the split). Every (tid, doc) pair is still unique, and
+    the block-aligned kernels rely on co-location (``_colocate_blocks``
+    brings all of a block's rows together), not on one row per (tid,
+    block). Query-side, Searcher
     sums dfreq segments and weight-averages stats segments, so an
     appended index answers queries EXACTLY like a full rebuild
     (tests/test_append.py).

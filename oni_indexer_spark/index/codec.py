@@ -34,6 +34,8 @@ roundtrip property tests (tests/test_codec.py).
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 
 _THRESHOLDS = [np.uint64(1) << np.uint64(7 * k) for k in range(1, 10)]
@@ -440,3 +442,95 @@ def decode_postings_batch(
         np.split(tfs, split_at),
         np.split(dls, split_at),
     )
+
+
+# --- Arrow block-row reader ------------------------------------------------
+# Every query-side Arrow kernel consumes postings as batches of block rows
+# ``(tid, block_id, block_min_dl[, n], blob)``. The row format — v4 or v5
+# stream, and the bases a blob is stored against (``block_id *
+# block_size`` for doc ids, ``block_min_dl`` for dls) — is read here and
+# nowhere else.
+
+
+class BlockRows(NamedTuple):
+    """One Arrow batch of block rows, decoded. Per ROW: ``tids``,
+    ``block_id``, ``counts`` (postings in the row); per POSTING:
+    ``doc_ids``, ``tfs``, ``dls``; ``pos_flat``: every posting's
+    positions back to back (v5, only when asked for)."""
+
+    tids: np.ndarray
+    block_id: np.ndarray
+    doc_ids: np.ndarray
+    tfs: np.ndarray
+    dls: np.ndarray
+    counts: np.ndarray
+    pos_flat: np.ndarray | None
+    block_size: int
+
+    def grid(self) -> tuple[np.ndarray, np.ndarray, int]:
+        """Dense (block-group × block_size) slot grid for rows sorted by
+        block_id: (slot of every posting, first doc id of every group,
+        number of groups). A doc's postings from every term land on the
+        same slot, so per-doc totals are one scatter-add."""
+        blk = self.block_id
+        new_grp = np.concatenate(([True], blk[1:] != blk[:-1]))
+        grp_of_row = np.cumsum(new_grp) - 1
+        grp_base = blk[new_grp] * self.block_size
+        grp_rep = np.repeat(grp_of_row, self.counts)
+        slot = grp_rep * self.block_size + (self.doc_ids - grp_base[grp_rep])
+        return slot, grp_base, int(grp_base.size)
+
+
+def read_block_rows(
+    batch,
+    block_size: int,
+    positions: bool = False,
+    with_positions: bool = False,
+) -> BlockRows:
+    """Decode an Arrow batch of block rows. ``positions``: the index is
+    v5 (the batch then carries the ``n`` column the v5 stream needs);
+    ``with_positions`` also materializes ``pos_flat``."""
+    cols = dict(zip(batch.schema.names, batch.columns))
+
+    def ints(name: str) -> np.ndarray:
+        return cols[name].to_numpy(zero_copy_only=False).astype(np.int64)
+
+    blobs = cols["blob"].to_pylist()
+    blk = ints("block_id")
+    base_docs = blk * block_size
+    base_dls = ints("block_min_dl")
+    pos_flat = None
+    if positions:
+        doc_ids, tfs, dls, counts, pos_flat = decode_postings_pos_flat(
+            blobs, ints("n"), base_docs, base_dls, with_positions=with_positions
+        )
+    else:
+        doc_ids, tfs, dls, counts = decode_postings_flat(blobs, base_docs, base_dls)
+    return BlockRows(ints("tid"), blk, doc_ids, tfs, dls, counts, pos_flat, block_size)
+
+
+def complete_blocks(batches):
+    """Re-cut a stream of Arrow batches sorted by block_id so that each
+    yielded batch holds only WHOLE blocks: a block split across two
+    input batches is carried into the next one, so no kernel ever sees a
+    doc's postings partially. Never yields an empty batch."""
+    import pyarrow as pa
+
+    carry = None
+    for bt in batches:
+        if carry is not None:
+            bt = pa.Table.from_batches([carry, bt]).combine_chunks().to_batches()[0]
+            carry = None
+        n = len(bt)
+        if n == 0:
+            continue
+        blk = bt.column(bt.schema.get_field_index("block_id")).to_numpy(
+            zero_copy_only=False
+        )
+        # hold back the trailing block: it may continue in the next batch
+        last_start = int(np.searchsorted(blk, blk[n - 1], side="left"))
+        carry = bt.slice(last_start)
+        if last_start > 0:
+            yield bt.slice(0, last_start)
+    if carry is not None:
+        yield carry

@@ -14,14 +14,15 @@ Physical shape of a query (see ``.explain`` audit in tests/bench):
       [directory-partition pruning + parquet row-group stats on tid]
   → [block-max prune: drop (term, block) rows that cannot reach the
      pass-1 threshold τ — lossless, tests/test_wand.py]
-  → single term: decode+score+candidate-select in one numpy pass, no
-    shuffle at all (per-posting score IS the per-doc score)
-  → multi term: repartition the COMPRESSED block rows by block_id (the
-    only shuffle — doc-range blocks are global, so every term's postings
-    for a doc share one block_id), then one numpy pass per co-located
-    group decodes, scatter-adds exact per-doc totals, applies AND/τ
-    bounds and per-batch conservative top-k selection — no decoded-row
-    shuffle, no JVM hash aggregate
+  → co-locate the COMPRESSED block rows by block_id (doc-range blocks
+    are global, so every term's postings for a doc share one block_id):
+    a single coalesced partition for tiny queries, else one
+    repartition — the only shuffle
+  → one numpy pass per co-located group decodes, scatter-adds exact
+    per-doc totals, applies AND/τ bounds and per-batch conservative
+    top-k selection — no decoded-row shuffle, no JVM hash aggregate.
+    Every BM25 score (any number of terms, k-bounded or not, with or
+    without fq) takes this one route (``_scores``).
   → TakeOrdered(k).
 """
 
@@ -44,85 +45,47 @@ def tfn_expr(tf: Column, dl: Column, avgdl: float, k1: float, b: float) -> Colum
     return (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / F.lit(avgdl)))
 
 
-def _make_decode_map_arrow(block_size: int):
+def _block_rows(postings: DataFrame, cfg: IndexConfig) -> DataFrame:
+    """The block-row columns every Arrow kernel reads
+    (``codec.read_block_rows``): v5 rows add ``n``, which the positional
+    stream needs to delimit itself."""
+    pos_cols = ["n"] if cfg.positions else []
+    return postings.select("tid", "block_id", "block_min_dl", *pos_cols, "blob")
+
+
+def _make_decode_map_arrow(block_size: int, positions: bool = False):
     """mapInArrow decoder factory: one vectorized numpy pass per Arrow
     batch, emitting already-EXPLODED (tid, doc_id, tf, dl) rows — no
-    pandas conversion, no JVM-side arrays_zip/explode. v4 blobs store
-    doc/dl relative to (block_id * block_size, block_min_dl); both base
-    columns ride in the row (2 small ints per BLOCK, repaid many times
-    over by the shorter varints per POSTING)."""
+    pandas conversion, no JVM-side arrays_zip/explode. ``positions``
+    (v5 index) adds each posting's positions as a list column — the
+    shape overwrite/compaction need to re-encode a positional index
+    losslessly."""
 
     def _decode(batches):
         import numpy as np
         import pyarrow as pa
 
-        from oni_indexer_spark.index.codec import decode_postings_flat
+        from oni_indexer_spark.index.codec import read_block_rows
 
+        names = ["tid", "doc_id", "tf", "dl"] + (["positions"] if positions else [])
         for b in batches:
-            idx = {n: i for i, n in enumerate(b.schema.names)}
-            blobs = b.column(idx["blob"]).to_pylist()
-            base_docs = (
-                b.column(idx["block_id"]).to_numpy(zero_copy_only=False).astype(np.int64)
-                * block_size
-            )
-            base_dls = b.column(idx["block_min_dl"]).to_numpy(zero_copy_only=False).astype(np.int64)
-            doc_ids, tfs, dls, counts = decode_postings_flat(blobs, base_docs, base_dls)
-            tid_idx = np.repeat(np.arange(len(blobs), dtype=np.int64), counts)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    b.column(idx["tid"]).take(pa.array(tid_idx)),
-                    pa.array(doc_ids, type=pa.int64()),
-                    pa.array(tfs, type=pa.int32()),
-                    pa.array(dls, type=pa.int32()),
-                ],
-                names=["tid", "doc_id", "tf", "dl"],
-            )
-
-    return _decode
-
-
-def _make_decode_map_pos_arrow(block_size: int):
-    """Positional (v5) decoder: like :func:`_make_decode_map_arrow` but
-    consumes the row's ``n`` column (the v5 stream is self-delimiting
-    only given the posting count) and emits each posting's positions as
-    a list column — the shape overwrite/compaction need to re-encode a
-    positional index losslessly."""
-
-    def _decode(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        from oni_indexer_spark.index.codec import decode_postings_pos_flat
-
-        for b in batches:
-            idx = {n: i for i, n in enumerate(b.schema.names)}
-            blobs = b.column(idx["blob"]).to_pylist()
-            ns = b.column(idx["n"]).to_numpy(zero_copy_only=False).astype(np.int64)
-            base_docs = (
-                b.column(idx["block_id"]).to_numpy(zero_copy_only=False).astype(np.int64)
-                * block_size
-            )
-            base_dls = b.column(idx["block_min_dl"]).to_numpy(zero_copy_only=False).astype(np.int64)
-            doc_ids, tfs, dls, counts, pos_flat = decode_postings_pos_flat(
-                blobs, ns, base_docs, base_dls
-            )
-            tid_idx = np.repeat(np.arange(len(blobs), dtype=np.int64), counts)
-            pos_offsets = np.concatenate(
-                ([0], np.cumsum(tfs.astype(np.int64)))
-            ).astype(np.int32)
-            pos_list = pa.ListArray.from_arrays(
-                pa.array(pos_offsets), pa.array(pos_flat, type=pa.int32())
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    b.column(idx["tid"]).take(pa.array(tid_idx)),
-                    pa.array(doc_ids, type=pa.int64()),
-                    pa.array(tfs, type=pa.int32()),
-                    pa.array(dls, type=pa.int32()),
-                    pos_list,
-                ],
-                names=["tid", "doc_id", "tf", "dl", "positions"],
-            )
+            r = read_block_rows(b, block_size, positions, with_positions=positions)
+            cols = [
+                pa.array(np.repeat(r.tids, r.counts), type=pa.int64()),
+                pa.array(r.doc_ids, type=pa.int64()),
+                pa.array(r.tfs, type=pa.int32()),
+                pa.array(r.dls, type=pa.int32()),
+            ]
+            if positions:
+                pos_offsets = np.concatenate(
+                    ([0], np.cumsum(r.tfs.astype(np.int64)))
+                ).astype(np.int32)
+                cols.append(
+                    pa.ListArray.from_arrays(
+                        pa.array(pos_offsets), pa.array(r.pos_flat, type=pa.int32())
+                    )
+                )
+            yield pa.RecordBatch.from_arrays(cols, names=names)
 
     return _decode
 
@@ -172,70 +135,30 @@ def _membership_filter(allowed, doc_ids, *arrs):
     return (doc_ids[ok], *[a[ok] for a in arrs])
 
 
-def _make_decode_score_topk_arrow(
-    block_size: int, idf_val: float, avgdl: float, k1: float, b: float, k: int,
-    positions: bool = False,
-    allowed_bc=None,
-):
-    """Single-term fast path: decode + BM25 score + per-batch candidate
-    top-k in ONE numpy pass. A single term hits each doc at most once
-    (tid, doc_id is unique across segments), so per-posting scores ARE
-    the final per-doc scores — no cross-term sum, hence no groupBy, and
-    each Arrow batch can pre-select its own top candidates, so a hot
-    term's ~n_docs postings never leave the Python worker (measured 1M
-    docs: the dominant cost of q_hot_single was pushing 1M decoded rows
-    through Arrow + a JVM hash aggregate).
+def _select_candidates(doc_ids, scores, k: int | None):
+    """Conservative per-batch top-k candidate selection: every doc with
+    score >= round(kth_batch_score, 6) - 1e-6 survives. The batch kth is
+    <= the global kth, so any dropped doc rounds strictly below the
+    global kth and cannot enter the final top-k even via the doc_id
+    tie-break (the same rounding-grid guard as the block pruner).
+    ``k=None`` keeps every doc."""
+    import numpy as np
 
-    Exactness: the score expression evaluates the same IEEE-double ops
-    in the same order as the JVM/tfn_expr/DuckDB forms. Selection is
-    conservative against the rank-rounding grid: every row with
-    score >= round(kth_batch_score, 6) - 1e-6 survives (same guard as
-    the block-max pruner), so the global top-k after rounding is
-    unchanged."""
+    if k is None or scores.size <= k:
+        return doc_ids, scores
+    kth = np.partition(scores, scores.size - k)[scores.size - k]
+    keep = scores >= (np.round(kth, 6) - 1e-6)
+    return doc_ids[keep], scores[keep]
 
-    def _decode(batches):
-        import numpy as np
-        import pyarrow as pa
 
-        from oni_indexer_spark.index.codec import (
-            decode_postings_flat,
-            decode_postings_pos_flat,
-        )
+def _scored_batch(doc_ids, scores):
+    """(doc_id, score) output batch of every scoring kernel."""
+    import pyarrow as pa
 
-        for batch in batches:
-            idx = {n: i for i, n in enumerate(batch.schema.names)}
-            blobs = batch.column(idx["blob"]).to_pylist()
-            base_docs = (
-                batch.column(idx["block_id"]).to_numpy(zero_copy_only=False).astype(np.int64)
-                * block_size
-            )
-            base_dls = (
-                batch.column(idx["block_min_dl"]).to_numpy(zero_copy_only=False).astype(np.int64)
-            )
-            if positions:
-                ns = batch.column(idx["n"]).to_numpy(zero_copy_only=False).astype(np.int64)
-                doc_ids, tfs, dls, _, _p = decode_postings_pos_flat(
-                    blobs, ns, base_docs, base_dls, with_positions=False
-                )
-            else:
-                doc_ids, tfs, dls, _ = decode_postings_flat(blobs, base_docs, base_dls)
-            if allowed_bc is not None:
-                doc_ids, tfs, dls = _membership_filter(
-                    allowed_bc.value, doc_ids, tfs, dls
-                )
-            tf = tfs.astype(np.float64)
-            dl = dls.astype(np.float64)
-            s = idf_val * ((tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / avgdl)))
-            if s.size > k:
-                kth = np.partition(s, s.size - k)[s.size - k]
-                keep = s >= (np.round(kth, 6) - 1e-6)
-                doc_ids, s = doc_ids[keep], s[keep]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(doc_ids, type=pa.int64()), pa.array(s, type=pa.float64())],
-                names=["doc_id", "score"],
-            )
-
-    return _decode
+    return pa.RecordBatch.from_arrays(
+        [pa.array(doc_ids, type=pa.int64()), pa.array(scores, type=pa.float64())],
+        names=["doc_id", "score"],
+    )
 
 
 def _make_decode_score_group_arrow(
@@ -250,8 +173,8 @@ def _make_decode_score_group_arrow(
     positions: bool = False,
     allowed_bc=None,
 ):
-    """Multi-term scorer factory: rows are (tid, block_id, block_min_dl,
-    blob), hash-partitioned by block_id and sorted by block_id within the
+    """The BM25 scorer factory: rows are (tid, block_id, block_min_dl
+    [, n], blob), co-located and sorted by block_id within the
     partition, so ALL query terms' postings for a given doc-range block
     arrive together (doc-range blocks are global across terms — a doc's
     block_id is doc_id // block_size for every term). One numpy pass per
@@ -261,67 +184,34 @@ def _make_decode_score_group_arrow(
       dense (block-group × block_size) score grid → per-doc EXACT totals
       + term-hit counts, entirely inside the Python worker.
 
-    This replaces the decoded-row shuffle + JVM hash aggregate of the
-    legacy path: the only shuffle is of the COMPRESSED block rows
-    (~2-4 B/posting vs ~16 B/posting partial-aggregated), and per-batch
-    candidate selection means a hot term's postings never leave the
-    worker (same trick as the single-term fast path, r3 VERDICT #2).
+    The only shuffle is of the COMPRESSED block rows (~2-4 B/posting vs
+    ~16 B/posting for decoded rows), and per-batch candidate selection
+    means a hot term's postings never leave the worker. A single term
+    needs no special case: each of its docs gets exactly one addition,
+    so its total IS the per-posting score.
 
     ``n_terms_and``: when set, keep only docs hit by exactly that many
     terms (AND mode; (tid, doc) is unique so hits == terms matched).
-    ``k``: per-batch conservative top-k selection — every doc with
-    score >= round(kth_batch_score, 6) - 1e-6 survives; the batch kth is
-    <= the global kth, so any dropped doc rounds strictly below the
-    global kth and cannot enter the final top-k even via the doc_id
-    tie-break (same rounding-grid guard as the block pruner).
+    ``k``: per-batch conservative top-k selection (``_select_candidates``).
     ``floor``: a PASS-1 τ (pruned path) — docs with total <
     round(τ,6)-1e-6 are dropped for the same reason (τ <= true kth).
-    Blocks split across Arrow batches are carried over so a doc's total
-    is never computed partially.
     """
 
     def _decode(batches):
         import numpy as np
-        import pyarrow as pa
 
-        from oni_indexer_spark.index.codec import (
-            decode_postings_flat,
-            decode_postings_pos_flat,
-        )
+        from oni_indexer_spark.index.codec import complete_blocks, read_block_rows
 
         guard = None if floor is None else (round(floor, 6) - 1e-6)
-
-        def process(tb):
-            idx = {n: i for i, n in enumerate(tb.schema.names)}
-            blobs = tb.column(idx["blob"]).to_pylist()
-            if not blobs:
-                return None
-            tids = tb.column(idx["tid"]).to_numpy(zero_copy_only=False).astype(np.int64)
-            blk = tb.column(idx["block_id"]).to_numpy(zero_copy_only=False).astype(np.int64)
-            base_docs = blk * block_size
-            base_dls = (
-                tb.column(idx["block_min_dl"]).to_numpy(zero_copy_only=False).astype(np.int64)
-            )
-            if positions:
-                ns = tb.column(idx["n"]).to_numpy(zero_copy_only=False).astype(np.int64)
-                doc_ids, tfs, dls, counts, _p = decode_postings_pos_flat(
-                    blobs, ns, base_docs, base_dls, with_positions=False
-                )
-            else:
-                doc_ids, tfs, dls, counts = decode_postings_flat(blobs, base_docs, base_dls)
-            idf_row = np.array([idf_by_tid[int(t)] for t in tids], dtype=np.float64)
-            tf = tfs.astype(np.float64)
-            dl = dls.astype(np.float64)
-            s = np.repeat(idf_row, counts) * (
+        for tb in complete_blocks(batches):
+            r = read_block_rows(tb, block_size, positions)
+            idf_row = np.array([idf_by_tid[int(t)] for t in r.tids], dtype=np.float64)
+            tf = r.tfs.astype(np.float64)
+            dl = r.dls.astype(np.float64)
+            s = np.repeat(idf_row, r.counts) * (
                 (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / avgdl))
             )
-            # dense (group, in-block offset) slots; rows sorted by block_id
-            new_grp = np.concatenate(([True], blk[1:] != blk[:-1]))
-            grp_of_row = np.cumsum(new_grp) - 1
-            n_grp = int(grp_of_row[-1]) + 1
-            grp_base = base_docs[new_grp]
-            grp_rep = np.repeat(grp_of_row, counts)
-            slot = grp_rep * block_size + (doc_ids - grp_base[grp_rep])
+            slot, grp_base, n_grp = r.grid()
             tot = np.zeros(n_grp * block_size, dtype=np.float64)
             np.add.at(tot, slot, s)
             hits = np.zeros(n_grp * block_size, dtype=np.int32)
@@ -340,39 +230,9 @@ def _make_decode_score_group_arrow(
             if guard is not None and out_s.size:
                 keep = out_s >= guard
                 out_docs, out_s = out_docs[keep], out_s[keep]
-            if k is not None and out_s.size > k:
-                kth = np.partition(out_s, out_s.size - k)[out_s.size - k]
-                keep = out_s >= (np.round(kth, 6) - 1e-6)
-                out_docs, out_s = out_docs[keep], out_s[keep]
-            if out_s.size == 0:
-                return None
-            return pa.RecordBatch.from_arrays(
-                [pa.array(out_docs, type=pa.int64()), pa.array(out_s, type=pa.float64())],
-                names=["doc_id", "score"],
-            )
-
-        carry: pa.RecordBatch | None = None
-        for bt in batches:
-            if carry is not None:
-                bt = pa.Table.from_batches([carry, bt]).combine_chunks().to_batches()[0]
-                carry = None
-            n = len(bt)
-            if n == 0:
-                continue
-            idx = {nm: i for i, nm in enumerate(bt.schema.names)}
-            blk = bt.column(idx["block_id"]).to_numpy(zero_copy_only=False)
-            # hold back the trailing block group: it may continue in the
-            # next batch of this partition
-            last_start = int(np.searchsorted(blk, blk[n - 1], side="left"))
-            carry = bt.slice(last_start)
-            if last_start > 0:
-                out = process(bt.slice(0, last_start))
-                if out is not None:
-                    yield out
-        if carry is not None and len(carry) > 0:
-            out = process(carry)
-            if out is not None:
-                yield out
+            out_docs, out_s = _select_candidates(out_docs, out_s, k)
+            if out_s.size:
+                yield _scored_batch(out_docs, out_s)
 
     return _decode
 
@@ -390,9 +250,9 @@ def _make_decode_phrase_group_arrow(
 ):
     """Phrase scorer factory (Lucene ``PhraseQuery`` semantics over the
     v5 positional blobs): rows are (tid, block_id, block_min_dl, n,
-    blob), hash-partitioned and sorted by block_id like the multi-term
-    scorer, so every phrase term's postings for a doc-range block arrive
-    together. One numpy pass per batch of complete blocks:
+    blob), co-located and sorted by block_id like the BM25 scorer, so
+    every phrase term's postings for a doc-range block arrive together.
+    One numpy pass per batch of complete blocks:
 
       decode (with positions) → for each query offset j holding term
       t_j, form keys ``slot * P + (pos − j)`` over t_j's positions →
@@ -404,9 +264,7 @@ def _make_decode_phrase_group_arrow(
 
     ``tid_offsets``: [(tid, offset)] for every query position (a term
     appearing twice in the phrase contributes two offsets). ``k``:
-    per-batch conservative candidate selection, same rounding-grid guard
-    as the OR scorer. Blocks split across Arrow batches are carried over
-    so no doc's positions are seen partially.
+    per-batch conservative candidate selection (``_select_candidates``).
 
     ``slop > 0`` switches to the sloppy matcher (Solr ``"a b"~N``):
     ORDERED proximity with a TOTAL gap budget — an anchor occurrence of
@@ -425,43 +283,23 @@ def _make_decode_phrase_group_arrow(
 
     def _decode(batches):
         import numpy as np
-        import pyarrow as pa
 
-        from oni_indexer_spark.index.codec import decode_postings_pos_flat
+        from oni_indexer_spark.index.codec import complete_blocks, read_block_rows
 
         m = len(tid_offsets)
 
         def process(tb):
-            idx = {n: i for i, n in enumerate(tb.schema.names)}
-            blobs = tb.column(idx["blob"]).to_pylist()
-            if not blobs:
-                return None
-            tids = tb.column(idx["tid"]).to_numpy(zero_copy_only=False).astype(np.int64)
-            blk = tb.column(idx["block_id"]).to_numpy(zero_copy_only=False).astype(np.int64)
-            ns = tb.column(idx["n"]).to_numpy(zero_copy_only=False).astype(np.int64)
-            base_docs = blk * block_size
-            base_dls = (
-                tb.column(idx["block_min_dl"]).to_numpy(zero_copy_only=False).astype(np.int64)
-            )
-            doc_ids, tfs, dls, counts, pos_flat = decode_postings_pos_flat(
-                blobs, ns, base_docs, base_dls
-            )
+            r = read_block_rows(tb, block_size, positions=True, with_positions=True)
+            doc_ids, tfs, pos_flat = r.doc_ids, r.tfs, r.pos_flat
             if doc_ids.size == 0:
                 return None
-            # dense (group, in-block offset) slots — same grid as the OR
-            # scorer (rows sorted by block_id within the partition)
-            new_grp = np.concatenate(([True], blk[1:] != blk[:-1]))
-            grp_of_row = np.cumsum(new_grp) - 1
-            n_grp = int(grp_of_row[-1]) + 1
-            grp_base = base_docs[new_grp]
-            grp_rep = np.repeat(grp_of_row, counts)
-            slot = grp_rep * block_size + (doc_ids - grp_base[grp_rep])
+            slot, grp_base, n_grp = r.grid()
             n_slots = n_grp * block_size
             slot_dl = np.zeros(n_slots, dtype=np.float64)
-            slot_dl[slot] = dls  # same dl for every term of a doc
+            slot_dl[slot] = r.dls  # same dl for every term of a doc
             # positions → their posting, term, slot
             tfs64 = tfs.astype(np.int64)
-            tid_of_post = np.repeat(tids, counts)
+            tid_of_post = np.repeat(r.tids, r.counts)
             # doc-level presence intersection BEFORE position expansion:
             # a phrase occurrence needs every distinct term present in
             # the doc, so only slots hit by all dts.size tids can match.
@@ -543,37 +381,14 @@ def _make_decode_phrase_group_arrow(
             out_docs = grp_base[hit_slots // block_size] + (hit_slots % block_size)
             if allowed_bc is not None:
                 # fq pushed into the worker: filter BEFORE candidate
-                # selection (same contract as the OR scorer)
+                # selection (same contract as the BM25 scorer)
                 out_docs, s = _membership_filter(allowed_bc.value, out_docs, s)
                 if out_docs.size == 0:
                     return None
-            if k is not None and s.size > k:
-                kth = np.partition(s, s.size - k)[s.size - k]
-                keep = s >= (np.round(kth, 6) - 1e-6)
-                out_docs, s = out_docs[keep], s[keep]
-            return pa.RecordBatch.from_arrays(
-                [pa.array(out_docs, type=pa.int64()), pa.array(s, type=pa.float64())],
-                names=["doc_id", "score"],
-            )
+            return _scored_batch(*_select_candidates(out_docs, s, k))
 
-        carry: pa.RecordBatch | None = None
-        for bt in batches:
-            if carry is not None:
-                bt = pa.Table.from_batches([carry, bt]).combine_chunks().to_batches()[0]
-                carry = None
-            n = len(bt)
-            if n == 0:
-                continue
-            idx = {nm: i for i, nm in enumerate(bt.schema.names)}
-            blk = bt.column(idx["block_id"]).to_numpy(zero_copy_only=False)
-            last_start = int(np.searchsorted(blk, blk[n - 1], side="left"))
-            carry = bt.slice(last_start)
-            if last_start > 0:
-                out = process(bt.slice(0, last_start))
-                if out is not None:
-                    yield out
-        if carry is not None and len(carry) > 0:
-            out = process(carry)
+        for tb in complete_blocks(batches):
+            out = process(tb)
             if out is not None:
                 yield out
 
@@ -581,24 +396,14 @@ def _make_decode_phrase_group_arrow(
 
 
 def _decoded(postings: DataFrame, cfg: IndexConfig) -> DataFrame:
-    """(tid, doc_id, tf, dl [, positions]) rows from (possibly
-    compressed) block rows; positional indexes decode their positions
-    list so re-encoding consumers (overwrite, compaction) stay
-    lossless."""
-    if cfg.compress and cfg.positions:
-        return postings.select(
-            "tid", "block_id", "block_min_dl", "n", "blob"
-        ).mapInArrow(
-            _make_decode_map_pos_arrow(cfg.block_size),
-            "tid long, doc_id long, tf int, dl int, positions array<int>",
-        )
-    if cfg.compress:
-        return postings.select("tid", "block_id", "block_min_dl", "blob").mapInArrow(
-            _make_decode_map_arrow(cfg.block_size),
-            "tid long, doc_id long, tf int, dl int",
-        )
-    return postings.select("tid", F.explode("plist").alias("p")).select(
-        "tid", F.col("p.doc_id").alias("doc_id"), F.col("p.tf").alias("tf"), F.col("p.dl").alias("dl")
+    """(tid, doc_id, tf, dl [, positions]) rows from block rows;
+    positional indexes decode their positions list so re-encoding
+    consumers (overwrite, compaction) stay lossless."""
+    schema = "tid long, doc_id long, tf int, dl int"
+    if cfg.positions:
+        schema += ", positions array<int>"
+    return _block_rows(postings, cfg).mapInArrow(
+        _make_decode_map_arrow(cfg.block_size, cfg.positions), schema
     )
 
 
@@ -639,13 +444,6 @@ def _empty_result(tables: IndexTables) -> DataFrame:
         tables.postings.sparkSession, "rank int, doc_id long, score double"
     )
 
-
-# A single-term query whose posting list is at least this long decodes
-# faster through the block-repartition path (32-way decode) than through
-# the zero-shuffle scan-side path (decode parallelism = scan splits of
-# one bucket). Measured at 1M docs: df≈1M term 1.9s scan-side vs 0.8s
-# for 2M postings repartitioned.
-SINGLE_TERM_REPARTITION_MIN_POSTINGS = 200_000
 
 # Target decoded postings per reduce task of the block-aligned scorer.
 # The numpy decode runs ~2-3M postings/s per core, so 64k postings is
@@ -696,9 +494,10 @@ def _colocate_blocks(
 
     - tiny queries over small scans (both gates above): ``coalesce(1)``
       + sort — NO exchange; the kernels already tolerate a block split
-      across Arrow batches (carry-over), and one partition trivially
-      co-locates, so this is input-identical to the shuffle plan while
-      running the whole query as ONE job instead of two AQE stage jobs.
+      across Arrow batches (``codec.complete_blocks``), and one
+      partition trivially co-locates, so this is input-identical to the
+      shuffle plan while running the whole query as ONE job instead of
+      two AQE stage jobs.
     - everything else: hash-repartition by block_id at the scale-adaptive
       width (see ``_scorer_nparts``; explicit ``nparts`` overrides, e.g.
       the block-max pruner's ≤k-block candidate pass).
@@ -711,6 +510,11 @@ def _colocate_blocks(
         and scan_est <= SCORER_COALESCE_MAX_SCAN_POSTINGS
     ):
         return sel.coalesce(1).sortWithinPartitions("block_id")
+    # EXPLICIT partition count: repartition(col) alone is an
+    # AQE-coalescible shuffle, and the blob shuffle is only a few MB per
+    # query — AQE would collapse it to ~1 post-shuffle partition and
+    # serialize the decode (measured at 1M docs: 3-4-term latency went
+    # linear in decoded volume).
     if nparts is None:
         nparts = _scorer_nparts(sel.sparkSession, est_postings)
     return sel.repartition(nparts, F.col("block_id")).sortWithinPartitions("block_id")
@@ -730,101 +534,49 @@ def _scores(
     allowed_bc=None,
     scan_est: int | None = None,
 ) -> DataFrame:
-    """Exact (doc_id, score) for every doc present in the postings subset.
-    ``idf`` is keyed by tid (the postings key). ``k`` (when given)
-    enables per-batch conservative candidate selection — it must be the
-    query's final top-k. ``floor`` is the pruned path's pass-1 τ (docs
-    provably below it round under the kth score and may be dropped).
-    ``est_postings`` (Σ df, known driver-side for free) routes large
-    single-term queries through the repartition path; ``nparts``
-    overrides the repartition width (the pruner's tiny candidate sets
-    don't need the full fan-out). ``allowed_bc`` (a broadcast SORTED
-    doc_id array — Searcher._fq_allowed) pushes a selective fq INTO the
-    workers so candidate selection stays on; without it an fq disables
-    per-batch selection (every matching doc's total leaves the workers)
-    and is applied by a doclen semi-join afterwards."""
+    """Exact (doc_id, score) for every doc present in the postings subset
+    — the engine's one BM25 scoring route: block rows →
+    ``_colocate_blocks`` → ``_make_decode_score_group_arrow``, for any
+    number of terms. ``idf`` is keyed by tid (the postings key). ``k``
+    (when given) enables per-batch conservative candidate selection — it
+    must be the query's final top-k; ``k=None`` (boolean clauses,
+    paging, rescore, facets) emits every matching doc's total.
+    ``floor`` is the pruned path's pass-1 τ (docs provably below it
+    round under the kth score and may be dropped). ``est_postings`` (Σ
+    df, known driver-side for free) and ``scan_est`` size the
+    co-location plan; ``nparts`` overrides the repartition width (the
+    pruner's tiny candidate sets don't need the full fan-out).
+    ``allowed_bc`` (a broadcast SORTED doc_id array —
+    Searcher._fq_allowed) pushes a selective fq INTO the workers so
+    candidate selection stays on; without it an fq disables per-batch
+    selection (every matching doc's total leaves the workers) and is
+    applied by a doclen semi-join afterwards."""
     cfg = tables.cfg
-    single_small = len(idf) == 1 and (
-        est_postings is None or est_postings < SINGLE_TERM_REPARTITION_MIN_POSTINGS
-    )
     fq_in_worker = fq is None or allowed_bc is not None
-    if single_small and fq_in_worker and cfg.compress and k is not None:
-        # single-term fast path: per-posting score IS the per-doc score;
-        # decode+score+candidate-select in one numpy pass, no shuffle,
-        # no aggregate. (an fq rides along as a broadcast doc filter
-        # when selective; an unselective fq needs the full score set —
-        # filtered docs could pull sub-candidate rows into the top-k —
-        # so it takes the slow path; terms over the repartition
-        # threshold take the block-aligned path below for decode
-        # parallelism.)
-        (idf_val,) = idf.values()
-        pos_cols = ["n"] if cfg.positions else []
-        return postings_subset.select(
-            "block_id", "block_min_dl", *pos_cols, "blob"
-        ).mapInArrow(
-            _make_decode_score_topk_arrow(
-                cfg.block_size, float(idf_val), float(avgdl), cfg.k1, cfg.b, k,
-                positions=cfg.positions,
-                allowed_bc=allowed_bc,
-            ),
-            "doc_id long, score double",
-        )
-    if cfg.compress and (len(idf) > 1 or (len(idf) == 1 and not single_small)):
-        # multi-term block-aligned path: ONE shuffle of the compressed
-        # block rows co-locates every term's postings per doc-range
-        # block; exact per-doc totals + AND/τ/top-k selection happen in
-        # numpy inside the worker (no decoded-row shuffle, no JVM agg).
-        # EXPLICIT partition count: repartition(col) alone is an
-        # AQE-coalescible shuffle, and the blob shuffle is only a few MB
-        # per query — AQE would collapse it to ~1 post-shuffle partition
-        # and serialize the decode (measured at 1M docs: 3-4-term
-        # latency went linear in decoded volume). The count is derived
-        # from Σ df (SCORER_POSTINGS_PER_PARTITION) so small corpora
-        # don't pay 32 near-empty reduce tasks of pure scheduling and
-        # large ones still fan the decode across the cores.
-        pos_cols = ["n"] if cfg.positions else []
-        co = _colocate_blocks(
-            postings_subset.select("tid", "block_id", "block_min_dl", *pos_cols, "blob"),
-            est_postings,
-            scan_est,
-            nparts=nparts,
-        )
-        scored = co.mapInArrow(
-            _make_decode_score_group_arrow(
-                cfg.block_size,
-                {int(t): float(v) for t, v in idf.items()},
-                float(avgdl),
-                cfg.k1,
-                cfg.b,
-                len(idf) if mode == "and" else None,
-                # without a pushed-down filter, fq filters AFTER scoring:
-                # a selected candidate set could lose its top rows to the
-                # filter, so emit all doc totals; with allowed_bc the
-                # filter runs in-worker BEFORE selection, so selection
-                # stays on and the output is O(k · batches)
-                k if fq_in_worker else None,
-                floor,
-                positions=cfg.positions,
-                allowed_bc=allowed_bc,
-            ),
-            "doc_id long, score double",
-        )
-        if fq and allowed_bc is None:
-            keep = _fq_keep(tables.doclen, fq)
-            scored = scored.join(keep.select("doc_id"), "doc_id", "left_semi")
-        return scored
-    rows = _decoded(postings_subset, cfg)
-    idf_map = F.create_map(*[F.lit(x) for kv in idf.items() for x in kv])
-    per_term = rows.withColumn(
-        "s", idf_map[F.col("tid")] * tfn_expr(F.col("tf"), F.col("dl"), avgdl, cfg.k1, cfg.b)
+    co = _colocate_blocks(
+        _block_rows(postings_subset, cfg), est_postings, scan_est, nparts=nparts
     )
-    agg = per_term.groupBy("doc_id").agg(
-        F.sum("s").alias("score"), F.count(F.lit(1)).alias("n_terms_hit")
+    scored = co.mapInArrow(
+        _make_decode_score_group_arrow(
+            cfg.block_size,
+            {int(t): float(v) for t, v in idf.items()},
+            float(avgdl),
+            cfg.k1,
+            cfg.b,
+            len(idf) if mode == "and" else None,
+            # without a pushed-down filter, fq filters AFTER scoring: a
+            # selected candidate set could lose its top rows to the
+            # filter, so emit all doc totals; with allowed_bc the filter
+            # runs in-worker BEFORE selection, so selection stays on and
+            # the output is O(k · batches)
+            k if fq_in_worker else None,
+            floor,
+            positions=cfg.positions,
+            allowed_bc=allowed_bc,
+        ),
+        "doc_id long, score double",
     )
-    if mode == "and":
-        agg = agg.where(F.col("n_terms_hit") == len(idf))
-    scored = agg.select("doc_id", "score")
-    if fq:
+    if fq and allowed_bc is None:
         keep = _fq_keep(tables.doclen, fq)
         scored = scored.join(keep.select("doc_id"), "doc_id", "left_semi")
     return scored
@@ -1678,7 +1430,7 @@ class Searcher:
         Scoring is Lucene's: the phrase behaves as one pseudo-term whose
         tf is the exact phrase occurrence count and whose idf weight is
         ``Σ_j idf(term_j)`` over the query positions (duplicate terms
-        contribute once per position). Physical plan = the multi-term
+        contribute once per position). Physical plan = the BM25 scorer's
         block-aligned shape: bucket/tid-pruned scan → rarest-term block
         prefilter (lossless semi-join, _rare_block_prefilter) → ONE
         repartition of compressed blobs by block_id → numpy decode →
@@ -1772,7 +1524,7 @@ class Searcher:
         # same scale-adaptive fan-out / shuffle-free crossover as _scores
         # (Σ df of the phrase's distinct terms bounds the decoded volume)
         co = _colocate_blocks(
-            p.select("tid", "block_id", "block_min_dl", "n", "blob"),
+            _block_rows(p, cfg),
             sum(dfs.values()),
             int(n_docs * avgdl * len(buckets) / cfg.n_buckets),
         )
@@ -1985,7 +1737,7 @@ def _blockmax_prune(
     Pass 1 scores just enough highest-bound blocks to get a candidate
     kth score τ (one 1-row collect — a scalar at any scale); the final
     pass keeps only blocks whose bound ≥ τ, and τ also rides into the
-    scorer as a per-DOC floor (multi-term path), cutting the candidate
+    scorer as a per-DOC floor, cutting the candidate
     rows that leave the worker. Any dropped doc scores < τ ≤ true kth
     score, so the top-k is unchanged (tests/test_wand.py).
 

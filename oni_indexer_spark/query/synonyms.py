@@ -8,14 +8,14 @@ tf merges BEFORE BM25's saturation, so this is NOT expressible as a
 weighted OR over member terms (which would saturate each member
 separately and over-score docs hitting several synonyms).
 
-The scorer is a variant of the block-aligned multi-term pass
+The scorer is a variant of the block-aligned BM25 scorer
 (``bm25._make_decode_score_group_arrow``): one shuffle of COMPRESSED
 block rows co-locates every member term's postings per doc-range
 block, then a numpy pass scatter-adds raw tf into a dense
 (block-group x block_size x n_groups) grid, saturates per group, and
 sums group scores per doc — exact totals, per-batch candidate
 selection, nothing doc-sized leaves the worker. Shuffle volume is the
-same few-bytes-per-posting blob shuffle as a plain multi-term query.
+same few-bytes-per-posting blob shuffle as a plain BM25 query.
 """
 
 from __future__ import annotations
@@ -50,52 +50,29 @@ def _make_decode_synonym_group_arrow(
 
     def _decode(batches):
         import numpy as np
-        import pyarrow as pa
 
-        from oni_indexer_spark.index.codec import (
-            decode_postings_flat,
-            decode_postings_pos_flat,
+        from oni_indexer_spark.index.codec import complete_blocks, read_block_rows
+        from oni_indexer_spark.query.bm25 import (
+            _membership_filter,
+            _scored_batch,
+            _select_candidates,
         )
-        from oni_indexer_spark.query.bm25 import _membership_filter
 
         idf_arr = np.asarray(idf_by_grp, dtype=np.float64)
 
-        def process(tb):
-            idx = {n: i for i, n in enumerate(tb.schema.names)}
-            blobs = tb.column(idx["blob"]).to_pylist()
-            if not blobs:
-                return None
-            tids = tb.column(idx["tid"]).to_numpy(zero_copy_only=False).astype(np.int64)
-            blk = tb.column(idx["block_id"]).to_numpy(zero_copy_only=False).astype(np.int64)
-            base_docs = blk * block_size
-            base_dls = (
-                tb.column(idx["block_min_dl"]).to_numpy(zero_copy_only=False).astype(np.int64)
-            )
-            if positions:
-                ns = tb.column(idx["n"]).to_numpy(zero_copy_only=False).astype(np.int64)
-                doc_ids, tfs, dls, counts, _p = decode_postings_pos_flat(
-                    blobs, ns, base_docs, base_dls, with_positions=False
-                )
-            else:
-                doc_ids, tfs, dls, counts = decode_postings_flat(
-                    blobs, base_docs, base_dls
-                )
-            grp_row = np.array([grp_by_tid[int(t)] for t in tids], dtype=np.int64)
-            grp_post = np.repeat(grp_row, counts)
+        for tb in complete_blocks(batches):
+            r = read_block_rows(tb, block_size, positions)
+            grp_row = np.array([grp_by_tid[int(t)] for t in r.tids], dtype=np.int64)
+            grp_post = np.repeat(grp_row, r.counts)
             # dense (block-group, in-block offset) slots, as in the
-            # plain multi-term scorer
-            new_grp = np.concatenate(([True], blk[1:] != blk[:-1]))
-            grp_of_row = np.cumsum(new_grp) - 1
-            n_blkgrp = int(grp_of_row[-1]) + 1
-            grp_base = base_docs[new_grp]
-            grp_rep = np.repeat(grp_of_row, counts)
-            slot = grp_rep * block_size + (doc_ids - grp_base[grp_rep])
+            # plain BM25 scorer
+            slot, grp_base, n_blkgrp = r.grid()
             # raw tf accumulates per (slot, synonym group) BEFORE
             # saturation — the defining SynonymQuery semantic
             tfsum = np.zeros(n_blkgrp * block_size * n_groups, dtype=np.float64)
-            np.add.at(tfsum, slot * n_groups + grp_post, tfs.astype(np.float64))
+            np.add.at(tfsum, slot * n_groups + grp_post, r.tfs.astype(np.float64))
             dl_arr = np.zeros(n_blkgrp * block_size, dtype=np.float64)
-            dl_arr[slot] = dls.astype(np.float64)  # dl identical per doc
+            dl_arr[slot] = r.dls.astype(np.float64)  # dl identical per doc
             tf2 = tfsum.reshape(-1, n_groups)
             denom = tf2 + k1 * (1.0 - b + b * (dl_arr / avgdl))[:, None]
             with np.errstate(invalid="ignore", divide="ignore"):
@@ -112,40 +89,9 @@ def _make_decode_synonym_group_arrow(
                 out_docs, out_s = _membership_filter(
                     allowed_bc.value, out_docs, out_s
                 )
-            if k is not None and out_s.size > k:
-                kth = np.partition(out_s, out_s.size - k)[out_s.size - k]
-                keep = out_s >= (np.round(kth, 6) - 1e-6)
-                out_docs, out_s = out_docs[keep], out_s[keep]
-            if out_s.size == 0:
-                return None
-            return pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_docs, type=pa.int64()),
-                    pa.array(out_s, type=pa.float64()),
-                ],
-                names=["doc_id", "score"],
-            )
-
-        carry = None
-        for bt in batches:
-            if carry is not None:
-                bt = pa.Table.from_batches([carry, bt]).combine_chunks().to_batches()[0]
-                carry = None
-            n = len(bt)
-            if n == 0:
-                continue
-            idx = {nm: i for i, nm in enumerate(bt.schema.names)}
-            blk = bt.column(idx["block_id"]).to_numpy(zero_copy_only=False)
-            last_start = int(np.searchsorted(blk, blk[n - 1], side="left"))
-            carry = bt.slice(last_start)
-            if last_start > 0:
-                out = process(bt.slice(0, last_start))
-                if out is not None:
-                    yield out
-        if carry is not None and len(carry) > 0:
-            out = process(carry)
-            if out is not None:
-                yield out
+            out_docs, out_s = _select_candidates(out_docs, out_s, k)
+            if out_s.size:
+                yield _scored_batch(out_docs, out_s)
 
     return _decode
 
@@ -164,7 +110,9 @@ def synonym_topk(
     from oni_indexer_spark.analyzer import analyzer_tokenize_py
     from oni_indexer_spark.hashing import xxhash64_str
     from oni_indexer_spark.query.bm25 import (
+        _block_rows,
         _buckets_for,
+        _colocate_blocks,
         _empty_result,
         _ranked,
         searcher_for,
@@ -173,8 +121,6 @@ def synonym_topk(
     s = searcher_for(tables)
     s._check_external_staleness()
     cfg = tables.cfg
-    if not cfg.compress:
-        raise ValueError("synonym_topk needs the compressed (blob) index layout")
 
     norm_groups: list[list[str]] = []
     seen: set[str] = set()
@@ -220,17 +166,14 @@ def synonym_topk(
             scan_terms.append(t)
 
     tids = [xxhash64_str(t) for t in scan_terms]
-    pos_cols = ["n"] if cfg.positions else []
     syn_buckets = _buckets_for(tables, scan_terms)
     p = tables.postings.where(
         F.col("bucket").isin(syn_buckets) & F.col("tid").isin(tids)
-    ).select("tid", "block_id", "block_min_dl", *pos_cols, "blob")
+    )
     # scale-adaptive fan-out / shuffle-free crossover, same rule as
     # bm25._scores (Σ df over the scanned terms bounds the decoded volume)
-    from oni_indexer_spark.query.bm25 import _colocate_blocks
-
     co = _colocate_blocks(
-        p,
+        _block_rows(p, cfg),
         sum(dfs[t] for t in scan_terms),
         int(n_docs * avgdl * len(syn_buckets) / cfg.n_buckets),
     )

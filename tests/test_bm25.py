@@ -37,7 +37,7 @@ def _oracle(query, k, mode, fq_lang):
 
 @pytest.fixture(scope="module")
 def tables(docs):
-    t = build_index(docs, IndexConfig(block_size=64, n_buckets=8, compress=True))
+    t = build_index(docs, IndexConfig(block_size=64, n_buckets=8))
     t.postings.cache().count()
     t.dfreq.cache().count()
     return t
@@ -70,11 +70,22 @@ def test_direct_path_matches_index_path(docs, tables, query, k, mode, fq_lang):
         assert abs(x[2] - y[2]) < 1e-9
 
 
-def test_uncompressed_mode_identical(docs):
-    t2 = build_index(docs, IndexConfig(block_size=64, n_buckets=8, compress=False))
-    a = _rows(topk(t2, "hash join", k=10))
-    exp = [(r[0], r[1], round(r[2], 6)) for r in _oracle("hash join", 10, "or", None)]
-    assert [(x[0], x[1]) for x in a] == [(e[0], e[1]) for e in exp]
+def test_retired_uncompressed_layout_refused(spark, tmp_path):
+    """An index written with the retired uncompressed layout shares
+    format v4 with the blob layout; its meta flag is the only thing that
+    tells them apart, so read_index must refuse it instead of decoding
+    its postings as blobs."""
+    from oni_indexer_spark.index import read_index
+    from oni_indexer_spark.index.lineage import Lineage
+
+    path = str(tmp_path / "idx")
+    Lineage(spark, path).write_meta({
+        "format": 4, "k1": 1.2, "b": 0.75, "block_size": 128,
+        "n_buckets": 32, "seg_blocks": 8192, "analyzer": "code",
+        "compress": False,
+    })
+    with pytest.raises(ValueError, match="rebuild with build_to_path"):
+        read_index(spark, path)
 
 
 def test_index_invariants(docs, tables):
@@ -101,10 +112,15 @@ def test_index_invariants(docs, tables):
 
 
 def test_blockaligned_carry_across_tiny_arrow_batches(spark, docs):
-    """The multi-term scorer must never split a block across Arrow
-    batches (a doc's total would be computed partially). Force 2-row
-    batches so every multi-term block straddles a boundary and exercise
-    the carry logic end to end."""
+    """The scorer must never split a block across Arrow batches (a
+    doc's total would be computed partially). Force 2-row batches so
+    every multi-row block straddles a boundary and exercise the carry
+    logic end to end — for multi-term, AND, single-term (k-bounded) and
+    a boolean query whose SHOULD and MUST_NOT clauses are single-term
+    k=None passes."""
+    from oni_indexer_spark.oracle import boolean_query_sql
+    from oni_indexer_spark.query import search
+
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key, "10000")
     spark.conf.set(key, "2")
@@ -116,6 +132,21 @@ def test_blockaligned_carry_across_tiny_arrow_batches(spark, docs):
         a2 = _rows(topk(t, "hash join", k=10, mode="and"))
         b2 = _rows(topk_direct(docs, "hash join", k=10, mode="and"))
         assert a2 == b2
+        a3 = _rows(topk(t, "the", k=25, prune=False))
+        b3 = _rows(topk_direct(docs, "the", k=25))
+        assert a3 == b3
+        a4 = _rows(search(t, "join -scan", k=25))
+        con = duckdb.connect()
+        con.execute(
+            f"CREATE VIEW documents AS SELECT * FROM '{SF_SMOKE}/documents.parquet'"
+        )
+        b4 = [
+            (r[0], r[1], round(r[2], 6))
+            for r in con.execute(boolean_query_sql("join -scan", k=25)).fetchall()
+        ]
+        assert a4 and [x[:2] for x in a4] == [x[:2] for x in b4]
+        for x, y in zip(a4, b4):
+            assert abs(x[2] - y[2]) < 1e-6
     finally:
         spark.conf.set(key, old)
 

@@ -3,11 +3,16 @@
 
 Query plan contract (query/bm25.py docstring):
   - postings scan is directory-pruned (PartitionFilters on bucket) and
-    row-group-pruned (PushedFilters In(term, ...)), reading ONLY
-    (term, blob) — no block metadata unless pruning needs it
-  - idf enters as a literal map: NO join against dfreq
+    row-group-pruned (PushedFilters In(tid, ...)), reading ONLY the
+    block-row columns (tid, block_id, block_min_dl, blob) — no other
+    block metadata unless pruning needs it
+  - idf enters the scorer as a driver-side constant: NO join against
+    dfreq
   - dl travels inside postings: NO join against doclen
-  - exactly one shuffle (the doc_id hash aggregation)
+  - one scoring plan for any number of terms: below the coalesce
+    crossover ZERO exchanges (Coalesce 1 + sort feeds the Arrow
+    scorer), above it exactly ONE exchange (the block_id
+    repartition of compressed block rows); never a JVM hash aggregate
   - top-k is TakeOrderedAndProject (heap per partition + merge)
 """
 
@@ -123,57 +128,33 @@ def test_resolve_via_no_unconditional_broadcast(spark):
 
 
 def test_single_term_fastpath_no_exchange(disk_index):
-    """Single-term queries score + candidate-select inside the decoder
-    (per-posting score == per-doc score), so the plan has NO shuffle at
-    all — scan → mapInArrow → TakeOrderedAndProject."""
+    """Single-term queries take the one scoring plan; at fixture scale
+    that is the below-crossover shape — scan → Coalesce 1 + sort →
+    mapInArrow (decode + score + candidate-select) →
+    TakeOrderedAndProject, with NO shuffle and no JVM aggregate."""
     plan = _plan(topk(disk_index, "hash", k=10, prune=False))
     assert "Exchange" not in plan
+    assert "Coalesce 1" in plan
     assert "TakeOrderedAndProject" in plan
     assert "HashAggregate" not in plan
 
 
-def test_single_term_fastpath_matches_slow_path(spark, disk_index):
-    """Fast path is rank- and score-exact vs the aggregate path (the
-    slow branch is forced by passing k=None to _scores): same rounded
-    scores, same order, for hot, mid and rare terms."""
-    from pyspark.sql import functions as F
+def test_single_term_matches_direct_path(docs, disk_index):
+    """Single-term index scoring is rank- and score-exact vs the
+    declarative no-index path (topk_direct: tokenize + JVM aggregate, an
+    independent implementation) for hot, mid and rare terms."""
+    from oni_indexer_spark.query import topk_direct
 
-    from oni_indexer_spark.query.bm25 import _ranked, _scores, searcher_for
-
-    s = searcher_for(disk_index)
-
-    terms = ["hash", "the", "scan"]
-    for t in terms:
-        fast = [tuple(r) for r in topk(disk_index, t, k=10, prune=False).collect()]
-        # slow path: force via the aggregate branch (k=None disables the
-        # fast path inside _scores)
-        n_docs, avgdl = s.stats()
-        dfs = s.term_dfs([t])
-        if not dfs:
-            continue
-        import math
-
-        from oni_indexer_spark.hashing import xxhash64_str
-
-        idf = {
-            xxhash64_str(tt): math.log(1.0 + (n_docs - d + 0.5) / (d + 0.5))
-            for tt, d in dfs.items()
-        }
-        from oni_indexer_spark.query.bm25 import _buckets_for
-
-        p = disk_index.postings.where(
-            F.col("bucket").isin(_buckets_for(disk_index, [t]))
-            & F.col("tid").isin(list(idf))
-        )
-        slow = [
-            tuple(r)
-            for r in _ranked(
-                _scores(p, disk_index, idf, avgdl, "or", None, k=None), 10
-            ).collect()
+    for t in ["hash", "the", "scan"]:
+        got = [
+            (r[0], r[1], round(r[2], 6))
+            for r in topk(disk_index, t, k=10, prune=False).orderBy("rank").collect()
         ]
-        fast_r = [(r[0], r[1], round(r[2], 6)) for r in fast]
-        slow_r = [(r[0], r[1], round(r[2], 6)) for r in slow]
-        assert fast_r == slow_r, t
+        exp = [
+            (r[0], r[1], round(r[2], 6))
+            for r in topk_direct(docs, t, k=10).orderBy("rank").collect()
+        ]
+        assert got and got == exp, t
 
 
 def test_constant_score_prefix_bounded_decode(disk_index):

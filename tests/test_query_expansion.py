@@ -35,7 +35,7 @@ def _duck(sql):
 
 @pytest.fixture(scope="module")
 def tables(docs):
-    t = build_index(docs, IndexConfig(block_size=64, n_buckets=8, compress=True))
+    t = build_index(docs, IndexConfig(block_size=64, n_buckets=8))
     t.postings.cache().count()
     t.dfreq.cache().count()
     return t
