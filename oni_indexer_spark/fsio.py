@@ -1,5 +1,5 @@
 """Filesystem abstraction for the engine's durability metadata — lineage
-records, index meta, and the overwrite swap manifest.
+records, index meta, and the mutators' swap manifest.
 
 All I/O here goes through Hadoop's ``FileSystem`` API via the JVM
 gateway (r3 VERDICT #4): the north_rule's target is a multi-executor

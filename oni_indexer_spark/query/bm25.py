@@ -467,10 +467,10 @@ SCORER_POSTINGS_PER_PARTITION = 65_536
 # -7-20%). A HIGHER crossover was measured and rejected: at 262k the
 # coalesce also serialized decodes the old path ran 2-4-wide, and 50k-doc
 # 3-4-term queries regressed ~20%. Gated ALSO on the scan side (postings
-# resident in the touched buckets, estimated driver-side as
-# n_docs*avgdl*buckets_touched/n_buckets): coalesce(1) collapses the
-# parquet scan to one task, which must stay cheap — a rare term in a
-# huge corpus keeps the parallel-scan + exchange path.
+# resident in the touched buckets, estimated driver-side by
+# _scan_estimate): coalesce(1) collapses the parquet scan to one task,
+# which must stay cheap — a rare term in a huge corpus keeps the
+# parallel-scan + exchange path.
 SCORER_COALESCE_MAX_POSTINGS = 65_536
 SCORER_COALESCE_MAX_SCAN_POSTINGS = 2_000_000
 
@@ -480,6 +480,18 @@ def _scorer_nparts(spark, est_postings: int | None) -> int:
     if est_postings is None:
         return conf_parts
     return max(1, min(conf_parts, -(-int(est_postings) // SCORER_POSTINGS_PER_PARTITION)))
+
+
+def _scan_estimate(
+    n_docs: int, avgdl: float, buckets: list[int], cfg: IndexConfig
+) -> int:
+    """Upper estimate of the postings RESIDENT in the touched ``buckets``
+    (avgdl ≥ distinct terms per doc) — the scan-side input of the
+    coalesce gate in :func:`_colocate_blocks`. It ASSUMES postings are
+    spread evenly across buckets, so a query touching a hot bucket is
+    under-estimated; per-bucket posting counts written at build time
+    would replace this one estimate."""
+    return int(n_docs * avgdl * len(buckets) / cfg.n_buckets)
 
 
 def _colocate_blocks(
@@ -614,14 +626,15 @@ class Searcher:
     scale every stop-word-bearing query clears it immediately).
 
     STALENESS: the cached stats/df describe the tables at construction.
-    In-process mutators (append_to_index / overwrite_docs) call the
-    module-level :func:`invalidate_searchers` hook; for OUT-OF-PROCESS
-    writers (another driver appending to the same path — invisible to
-    this registry) every :meth:`topk` first compares the index's
-    ``_lineage`` directory listing (name/mtime/size per record — every
-    mutator commits a new lineage record) against the listing memoized
-    with the caches, and self-invalidates on any change (r3 VERDICT #5).
-    One FileSystem.listStatus per query — driver-side, ~ms.
+    In-process mutators (append_to_index / overwrite_docs / delete_docs /
+    compact_index) call the module-level :func:`invalidate_searchers`
+    hook; for OUT-OF-PROCESS writers (another driver appending to the
+    same path — invisible to this registry) every :meth:`topk` first
+    compares the index's ``_lineage`` directory listing (name/mtime/size
+    per record — every mutator commits a new lineage record) against the
+    listing memoized with the caches, and self-invalidates on any change
+    (r3 VERDICT #5). One FileSystem.listStatus per query — driver-side,
+    ~ms.
     """
 
     # an fq matching at most this many docs ships as a broadcast sorted
@@ -858,9 +871,7 @@ class Searcher:
             F.col("bucket").isin(buckets) & F.col("tid").isin(list(idf))
         )
         est = sum(dfs.values())
-        # upper estimate of postings RESIDENT in the touched buckets
-        # (avgdl ≥ distinct terms per doc) — the coalesce scan gate
-        scan_est = int(n_docs * avgdl * len(buckets) / tables.cfg.n_buckets)
+        scan_est = _scan_estimate(n_docs, avgdl, buckets, tables.cfg)
         if mode == "and":
             p = self._rare_block_prefilter(p, dfs, n_docs)
         if prune == "auto":
@@ -927,9 +938,7 @@ class Searcher:
         return _scores(
             p, tables, idf, avgdl, mode, fq, k=None,
             est_postings=sum(dfs.values()), allowed_bc=allowed_bc,
-            scan_est=int(
-                n_docs * avgdl * len(clause_buckets) / tables.cfg.n_buckets
-            ),
+            scan_est=_scan_estimate(n_docs, avgdl, clause_buckets, tables.cfg),
         )
 
     def _expansion(
@@ -1526,7 +1535,7 @@ class Searcher:
         co = _colocate_blocks(
             _block_rows(p, cfg),
             sum(dfs.values()),
-            int(n_docs * avgdl * len(buckets) / cfg.n_buckets),
+            _scan_estimate(n_docs, avgdl, buckets, cfg),
         )
         scored = co.mapInArrow(
             _make_decode_phrase_group_arrow(
@@ -1562,12 +1571,12 @@ def searcher_for(tables: IndexTables) -> Searcher:
 
 def invalidate_searchers(path: str | None = None) -> None:
     """Drop all memoized stats/dfs — called by the mutators
-    (append_to_index / overwrite_docs) so a Searcher over a tables object
-    whose backing path just changed re-reads N/avgdl/df on its next
-    query. Each Searcher whose tables carry a path also refreshes Spark's
-    cached file listing; ``path`` additionally refreshes the mutated
-    directory itself, covering IndexTables objects that never went
-    through searcher_for."""
+    (append_to_index / overwrite_docs / delete_docs / compact_index) so
+    a Searcher over a tables object whose backing path just changed
+    re-reads N/avgdl/df on its next query. Each Searcher whose tables
+    carry a path also refreshes Spark's cached file listing; ``path``
+    additionally refreshes the mutated directory itself, covering
+    IndexTables objects that never went through searcher_for."""
     for _, s in _SEARCHERS.values():
         s.invalidate()
     if path is not None:

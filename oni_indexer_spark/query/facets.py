@@ -339,6 +339,7 @@ def facet_query(
         _block_rows,
         _buckets_for,
         _colocate_blocks,
+        _scan_estimate,
         searcher_for,
     )
 
@@ -386,8 +387,7 @@ def facet_query(
     )
     n_docs, avgdl = s.stats()
     co = _colocate_blocks(
-        _block_rows(p, cfg), est,
-        int(n_docs * avgdl * len(fq_buckets) / cfg.n_buckets),
+        _block_rows(p, cfg), est, _scan_estimate(n_docs, avgdl, fq_buckets, cfg)
     )
     partials = co.mapInArrow(
         _make_facet_count_arrow(

@@ -115,6 +115,7 @@ def synonym_topk(
         _colocate_blocks,
         _empty_result,
         _ranked,
+        _scan_estimate,
         searcher_for,
     )
 
@@ -175,7 +176,7 @@ def synonym_topk(
     co = _colocate_blocks(
         _block_rows(p, cfg),
         sum(dfs[t] for t in scan_terms),
-        int(n_docs * avgdl * len(syn_buckets) / cfg.n_buckets),
+        _scan_estimate(n_docs, avgdl, syn_buckets, cfg),
     )
     scored = co.mapInArrow(
         _make_decode_synonym_group_arrow(

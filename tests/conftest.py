@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 
@@ -24,3 +25,24 @@ def docs(spark):
     from oni_indexer_spark.corpus import from_driver_documents
 
     return from_driver_documents(spark, SF_SMOKE).cache()
+
+
+@pytest.fixture
+def crash_at_swap(monkeypatch):
+    """Context manager: a mutator run inside it dies right after its swap
+    manifest is durable (``build._apply_swap`` raises, nothing swapped
+    yet), and the crash is expected. The patch is undone on exit, so a
+    later ``read_index`` replays the pending swap for real."""
+    from oni_indexer_spark.index import build
+
+    def _crash(path, fs):
+        raise RuntimeError("injected crash: swap manifest written, swap not applied")
+
+    @contextlib.contextmanager
+    def _ctx():
+        with monkeypatch.context() as m:
+            m.setattr(build, "_apply_swap", _crash)
+            with pytest.raises(RuntimeError, match="injected crash"):
+                yield
+
+    return _ctx

@@ -165,6 +165,29 @@ def test_compact_then_append_continues(spark, docs, split_docs):
         assert _rows(topk(appended, q, k=10)) == _rows(topk(full, q, k=10)), q
 
 
+def test_compact_crash_after_manifest_replays(spark, split_docs, tmp_path, crash_at_swap):
+    """Compaction dies right after its swap manifest is durable (nothing
+    swapped yet): read_index replays the swap, and the compacted index
+    answers exactly like the uncompacted one."""
+    import os
+
+    from oni_indexer_spark.index import compact_index
+
+    a, b, _ = split_docs
+    p = str(tmp_path / "idx")
+    build_to_path(a, p, CFG, bucket_group_size=8)
+    append_to_index(b, p)
+    pre = {q: _rows(topk(read_index(spark, p), q, k=10)) for q in QUERIES}
+    with crash_at_swap():
+        compact_index(p, spark)
+    assert os.path.exists(f"{p}/_pending_swap.json")
+    after = read_index(spark, p)  # replays the swap
+    assert not os.path.exists(f"{p}/_pending_swap.json")
+    assert after.stats.count() == 1
+    for q in QUERIES:
+        assert _rows(topk(after, q, k=10)) == pre[q], q
+
+
 def test_stream_auto_compaction(spark, docs, split_docs, tmp_path):
     """compact_every: the background-merge policy must fire once enough
     streamed segments accumulate, consolidate them, and leave every

@@ -97,7 +97,7 @@ def test_overwrite_idempotent_on_replay(spark, paths):
     assert disk.stats.agg(F.sum("n_docs")).collect()[0][0] == 256
 
 
-def test_crash_after_stage_self_heals(spark):
+def test_crash_after_stage_self_heals(spark, crash_at_swap):
     """Crash-injection: overwrite dies right after the swap manifest is
     written (nothing swapped yet). read_index replays the pending swap
     and the index answers exactly like a fresh build over the updated
@@ -109,8 +109,8 @@ def test_crash_after_stage_self_heals(spark):
     p = f"{base}/idx"
     build_to_path(_corpus(spark), p, CFG, bucket_group_size=4)
     changed = _corpus(spark, marker="crash_mark").where(F.col("doc_id") % 200 == 0)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        overwrite_docs(changed, p, _fault_after_stage=True)
+    with crash_at_swap():
+        overwrite_docs(changed, p)
     man = f"{p}/_pending_swap.json"
     assert os.path.exists(man)
     with open(man) as fh:
@@ -125,21 +125,22 @@ def test_crash_after_stage_self_heals(spark):
     shutil.rmtree(base, ignore_errors=True)
 
 
-def test_crash_mid_swap_replay_idempotent(spark):
+def test_crash_mid_swap_replay_idempotent(spark, crash_at_swap):
     """Crash-injection mid-swap: some manifest steps already applied
     (a target dir deleted, one staged dir already renamed). Replaying the
     manifest must not delete swapped-in data or double-apply anything."""
     import json
     import shutil
 
-    from oni_indexer_spark.index.build import _apply_swap, _fs_for
+    from oni_indexer_spark.fsio import Fs
+    from oni_indexer_spark.index.build import _apply_swap
 
     base = tempfile.mkdtemp(prefix="ovr_crash2_")
     p = f"{base}/idx"
     build_to_path(_corpus(spark), p, CFG, bucket_group_size=4)
     changed = _corpus(spark, marker="crash_mark2").where(F.col("doc_id") % 200 == 0)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        overwrite_docs(changed, p, _fault_after_stage=True)
+    with crash_at_swap():
+        overwrite_docs(changed, p)
     with open(f"{p}/_pending_swap.json") as fh:
         m = json.load(fh)
     # simulate a partially-applied swap: first delete done, first move done
@@ -148,12 +149,57 @@ def test_crash_mid_swap_replay_idempotent(spark):
     staged_rel, live_rel = m["moves"][0]
     shutil.rmtree(os.path.join(p, live_rel), ignore_errors=True)
     os.rename(os.path.join(p, staged_rel), os.path.join(p, live_rel))
-    _apply_swap(p, _fs_for(p, spark))  # replay the whole manifest
+    _apply_swap(p, Fs(p, spark))  # replay the whole manifest
     disk = read_index(spark, p)
     fresh = build_index(_corpus(spark, marker="crash_mark2"), CFG)
     for q in ["crash_mark2", "gamma crash_mark2", "alpha"]:
         assert _rows(topk(disk, q, k=10)) == _rows(topk(fresh, q, k=10)), q
     shutil.rmtree(base, ignore_errors=True)
+
+
+def _summed_dfreq(tables):
+    return {
+        r["term"]: (r["df"], r["cf"])
+        for r in tables.dfreq.groupBy("term")
+        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+        .collect()
+    }
+
+
+@pytest.mark.parametrize("mutator", ["overwrite", "delete"])
+def test_mutate_after_append_matches_fresh_build(spark, tmp_path, mutator):
+    """After append_to_index, dfreq holds one row per term per segment.
+    Overwrite and delete must correct each changed term's df/cf once,
+    not once per segment row, so dfreq and scores equal a fresh build."""
+    from oni_indexer_spark.index import append_to_index, delete_docs
+
+    corpus = _corpus(spark)
+    ids = [5, 105, 205]  # two in the built segment, one in the appended one
+    p = str(tmp_path / "idx")
+    build_to_path(corpus.where(F.col("doc_id") < 200), p, CFG, bucket_group_size=4)
+    append_to_index(corpus.where(F.col("doc_id") >= 200), p)
+    kept = corpus.where(~F.col("doc_id").isin(ids))
+    if mutator == "overwrite":
+        new = corpus.where(F.col("doc_id").isin(ids)).withColumn(
+            "content", F.concat(F.lit("delta tok_"), F.col("doc_id").cast("string"))
+        )
+        overwrite_docs(new, p)
+        kept = kept.unionByName(new)
+    else:
+        delete_docs(p, spark, doc_ids=ids)
+    disk = read_index(spark, p)
+    fresh = build_index(kept, CFG)
+    assert _summed_dfreq(disk) == _summed_dfreq(fresh)
+    # the rewritten dfreq keeps the build's term order per file, which
+    # prefix/fuzzy expansion relies on for rowgroup pruning
+    import glob
+
+    import pyarrow.parquet as pq
+
+    for f in glob.glob(f"{p}/dfreq/bucket=*/*.parquet"):
+        terms = pq.read_table(f, columns=["term"]).column("term").to_pylist()
+        assert terms == sorted(terms), f
+    assert _rows(topk(disk, "alpha gamma", k=10)) == _rows(topk(fresh, "alpha gamma", k=10))
 
 
 def test_mutators_reject_old_format(spark):
@@ -228,11 +274,9 @@ def test_delete_docs_matches_filtered_oracle(spark, docs, tmp_path):
     assert n_docs == 500 - 10 - n_fr
 
 
-def test_delete_docs_crash_replay(spark, docs, tmp_path):
+def test_delete_docs_crash_replay(spark, docs, tmp_path, crash_at_swap):
     """Crash after the swap manifest: read_index replays the swap and
     the deletion is complete (same guarantee as overwrite's)."""
-    import pytest as _pytest
-
     from oni_indexer_spark.index import (
         IndexConfig,
         build_to_path,
@@ -244,8 +288,8 @@ def test_delete_docs_crash_replay(spark, docs, tmp_path):
     p = str(tmp_path / "delcrash")
     build_to_path(docs, p, IndexConfig(block_size=64, n_buckets=8),
                   bucket_group_size=8, resume=False)
-    with _pytest.raises(RuntimeError, match="injected crash"):
-        delete_docs(p, spark, doc_ids=[1, 2, 3], _fault_after_stage=True)
+    with crash_at_swap():
+        delete_docs(p, spark, doc_ids=[1, 2, 3])
     t = read_index(spark, p)  # replays _pending_swap.json
     hits = {r["doc_id"] for r in topk(t, "the", k=1000).collect()}
     assert not hits & {1, 2, 3}
